@@ -22,10 +22,14 @@ statistics). So:
            path — no UDF in scoring), take top-k.
 
 Incremental semantics (streaming/ingest.py writes the deltas):
-  * every upsert/delete of doc d in generation g writes a tombstone (d,g);
-    postings of d from generations < g are dropped after decode
-    (last-writer-wins — the reference's idempotent uuid-keyed upsert,
-    /root/reference/pkg/es/service.go:119-138).
+  * every upsert/delete of doc d in generation g writes a tombstone (d,g).
+    Last-writer-wins (the reference's idempotent uuid-keyed upsert,
+    /root/reference/pkg/es/service.go:119-138): a posting of generation
+    g' survives iff its doc has no tombstone from a generation > g'. The
+    rule is applied in ONE place, _read_live, which every distributed
+    read of postings goes through — queries, fold_deltas and
+    merge_delta_tier alike; the driver fast path serves base-only
+    indexes, which carry no tombstones.
   * N and avgdl are EXACT (maintained in the docs table per batch);
     per-term df is Lucene-faithful approximate until fold_deltas — counts
     include superseded postings, exactly as Lucene counts deleted docs in
@@ -43,6 +47,7 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -101,35 +106,6 @@ _DECODED_SCHEMA = StructType(
     ]
 )
 
-
-def _decode_blocks(iterator):
-    """mapInPandas decoder: segment rows → exploded postings. Arrow-batched,
-    numpy-vectorized; one Python call per batch of blocks."""
-    empty = pd.DataFrame(
-        {"term": pd.Series(dtype="str"), "gen": pd.Series(dtype="int32"),
-         "doc_id": pd.Series(dtype="int64"), "tf": pd.Series(dtype="int64"),
-         "doc_len": pd.Series(dtype="int64")}
-    )
-    for pdf in iterator:
-        outs = []
-        for docs_vb, tfs_vb, dlens_vb, term, gen in zip(
-            pdf["docs_vb"], pdf["tfs_vb"], pdf["dlens_vb"], pdf["term"], pdf["gen"]
-        ):
-            docs = codec.delta_decode(docs_vb).astype(np.int64)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "term": term,
-                        "gen": np.int32(gen),
-                        "doc_id": docs,
-                        "tf": codec.varbyte_decode(tfs_vb).astype(np.int64),
-                        "doc_len": codec.varbyte_decode(dlens_vb).astype(np.int64),
-                    }
-                )
-            )
-        yield pd.concat(outs) if outs else empty
-
-
 _POS_SCHEMA = StructType(
     [
         StructField("term", StringType()),
@@ -140,35 +116,119 @@ _POS_SCHEMA = StructType(
 )
 
 
-def _decode_blocks_positions(iterator):
-    """mapInPandas decoder for phrase queries: segment rows → exploded
-    (term, gen, doc_id, pos) rows. Positions reconstructed vectorized
-    (codec.positions_decode); doc ids repeated per tf."""
-    empty = pd.DataFrame(
-        {"term": pd.Series(dtype="str"), "gen": pd.Series(dtype="int32"),
-         "doc_id": pd.Series(dtype="int64"), "pos": pd.Series(dtype="int64")}
-    )
+def _decode_rows(blocks: pd.DataFrame, positions: bool = False,
+                 max_positions: "int | None" = None) -> "tuple | None":
+    """THE block decoder, shared by the driver fast path and the
+    distributed mapInPandas decode: a frame of segment rows (docs_vb,
+    tfs_vb, and dlens_vb or pos_vb) → flat int64 arrays in one vectorized
+    pass. The blocks' byte streams are concatenated — varbyte values and
+    within-doc position deltas are self-delimiting — and the doc-id gap
+    running sum is re-based at each block start.
+
+    Returns (row, doc_id, tf, doc_len), one entry per posting, or with
+    ``positions`` (row, doc_id, pos), one entry per position; ``row``
+    indexes the source block in ``blocks``. With positions it returns
+    None when Σtf exceeds ``max_positions`` (checked before the position
+    stream is decoded)."""
+    docs_vb = blocks["docs_vb"].tolist()
+    stream = b"".join(docs_vb)
+    nbytes = np.fromiter(map(len, docs_vb), np.int64, len(docs_vb))
+    ends = np.cumsum(nbytes)
+    # postings per block = terminator bytes (high bit clear) per block
+    n_term = np.concatenate(
+        ([0], np.cumsum((np.frombuffer(stream, np.uint8) & 0x80) == 0)))
+    counts = n_term[ends] - n_term[ends - nbytes]
+    run = codec.delta_decode(stream)
+    base = np.concatenate((np.zeros(1, np.uint64), run))[
+        np.cumsum(counts) - counts]
+    doc = (run - np.repeat(base, counts)).astype(np.int64)
+    row = np.repeat(np.arange(len(docs_vb)), counts)
+    tf = codec.varbyte_decode(b"".join(blocks["tfs_vb"])).astype(np.int64)
+    if not positions:
+        dl = codec.varbyte_decode(b"".join(blocks["dlens_vb"]))
+        return row, doc, tf, dl.astype(np.int64)
+    if max_positions is not None and int(tf.sum()) > max_positions:
+        return None
+    pos = codec.positions_decode(b"".join(blocks["pos_vb"]), tf)
+    return np.repeat(row, tf), np.repeat(doc, tf), pos.astype(np.int64)
+
+
+def _decode_blocks(iterator):
+    """mapInPandas placement of _decode_rows: one decode and one output
+    frame per Arrow batch → (term, gen, doc_id, tf, doc_len)."""
     for pdf in iterator:
-        outs = []
-        for docs_vb, tfs_vb, pos_vb, term, gen in zip(
-            pdf["docs_vb"], pdf["tfs_vb"], pdf["pos_vb"], pdf["term"], pdf["gen"]
-        ):
-            if not pos_vb:
-                continue
-            docs = codec.delta_decode(docs_vb).astype(np.int64)
-            tfs = codec.varbyte_decode(tfs_vb)
-            flat = codec.positions_decode(pos_vb, tfs).astype(np.int64)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "term": term,
-                        "gen": np.int32(gen),
-                        "doc_id": np.repeat(docs, tfs.astype(np.int64)),
-                        "pos": flat,
-                    }
-                )
-            )
-        yield pd.concat(outs) if outs else empty
+        row, doc, tf, dl = _decode_rows(pdf)
+        yield pd.DataFrame({
+            "term": pdf["term"].to_numpy(object)[row],
+            "gen": pdf["gen"].to_numpy(np.int32)[row],
+            "doc_id": doc, "tf": tf, "doc_len": dl})
+
+
+def _decode_blocks_positions(iterator):
+    """mapInPandas placement of _decode_rows with positions → (term,
+    gen, doc_id, pos), one row per token position. Blocks written
+    without positions are skipped."""
+    for pdf in iterator:
+        pdf = pdf.loc[np.array([bool(v) for v in pdf["pos_vb"]], bool)]
+        row, doc, pos = _decode_rows(pdf, positions=True)
+        yield pd.DataFrame({
+            "term": pdf["term"].to_numpy(object)[row],
+            "gen": pdf["gen"].to_numpy(np.int32)[row],
+            "doc_id": doc, "pos": pos})
+
+
+def _segment_scan(spark: SparkSession, path: str, gens: list[int],
+                  base_dir: "str | None" = None) -> DataFrame:
+    """Union of the base segments (``base_dir``, as gen 0) and the given
+    delta generations' segments, each row tagged with its ``gen``."""
+    parts = [] if base_dir is None else [
+        spark.read.parquet(pjoin(path, base_dir)).withColumn("gen", F.lit(0))]
+    parts += [
+        spark.read.schema(SEGMENT_READ_SCHEMA).parquet(
+            pjoin(path, "delta", f"gen={g}", "segments")
+        ).withColumn("gen", F.lit(g))
+        for g in gens
+    ]
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _tombstones(spark: SparkSession, path: str,
+                gens: list[int]) -> DataFrame | None:
+    """(doc_id, tgen) — the max tombstone generation per doc over the
+    given delta generations; None when there are none."""
+    if not gens:
+        return None
+    return reduce(DataFrame.unionByName, [
+        spark.read.parquet(
+            pjoin(path, "delta", f"gen={g}", "tombstones")
+        ).select("doc_id", F.lit(g).alias("tgen"))
+        for g in gens
+    ]).groupBy("doc_id").agg(F.max("tgen").alias("tgen"))
+
+
+def _read_live(segs: DataFrame, tomb: DataFrame | None,
+               positions: bool = False,
+               partitions: "int | None" = None) -> DataFrame:
+    """THE live-postings reader: segment rows → decoded postings (or
+    positions, see _decode_rows) with the last-writer-wins rule applied:
+    a posting of generation ``gen`` survives iff its doc has no
+    tombstone from a later generation. ``tomb`` comes from _tombstones;
+    None keeps every posting. ``partitions`` coalesces the scan before
+    the decode."""
+    rows = segs.select("term", "gen", "docs_vb", "tfs_vb",
+                       "pos_vb" if positions else "dlens_vb")
+    if partitions:
+        rows = rows.coalesce(partitions)
+    decoded = (
+        rows.mapInPandas(_decode_blocks_positions, _POS_SCHEMA) if positions
+        else rows.mapInPandas(_decode_blocks, _DECODED_SCHEMA))
+    if tomb is None:
+        return decoded
+    return (
+        decoded.join(F.broadcast(tomb), "doc_id", "left")
+        .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
+        .drop("tgen")
+    )
 
 
 def _partial_np(tf: np.ndarray, dl: np.ndarray, avgdl: float,
@@ -361,19 +421,8 @@ class SegmentIndex:
         """Union reader over base + delta generations (plan cached on the
         instance — re-listing parquet dirs per query is pure overhead)."""
         if getattr(self, "_segs_cache", None) is None:
-            base = self.spark.read.parquet(pjoin(self.path, self.seg_dir)) \
-                .withColumn("gen", F.lit(0))
-            parts = [base]
-            for g in self.generations:
-                parts.append(
-                    self.spark.read.schema(SEGMENT_READ_SCHEMA).parquet(
-                        pjoin(self.path, "delta", f"gen={g}", "segments")
-                    ).withColumn("gen", F.lit(g))
-                )
-            segs = parts[0]
-            for p in parts[1:]:
-                segs = segs.unionByName(p)
-            self._segs_cache = segs
+            self._segs_cache = _segment_scan(
+                self.spark, self.path, self.generations, self.seg_dir)
         return self._segs_cache
 
     def _segments(self, terms: list[str] | None) -> DataFrame:
@@ -384,22 +433,6 @@ class SegmentIndex:
         # bucket directory pruning without a Spark job
         buckets = sorted({pmod(xxh64_string(t), self.n_buckets) for t in terms})
         return segs.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
-
-    def _tombstones(self) -> DataFrame | None:
-        """(doc_id, tgen) — max tombstone generation per doc."""
-        if not self.generations:
-            return None
-        parts = []
-        for g in self.generations:
-            parts.append(
-                self.spark.read.parquet(
-                    pjoin(self.path, "delta", f"gen={g}", "tombstones")
-                ).select("doc_id", F.lit(g).alias("tgen"))
-            )
-        t = parts[0]
-        for p in parts[1:]:
-            t = t.unionByName(p)
-        return t.groupBy("doc_id").agg(F.max("tgen").alias("tgen"))
 
     def _meta(self, terms: list[str]) -> pd.DataFrame:
         """Metadata-only scan — binary columns never touched. On a local
@@ -504,28 +537,6 @@ class SegmentIndex:
             return pd.DataFrame(columns=cols)
         return pa.concat_tables(tabs).to_pandas()
 
-    def _decode_local(self, blocks: pd.DataFrame
-                      ) -> "tuple[np.ndarray, ...]":
-        """Decode fast-path block rows → flat (doc_ids, tfs, dls,
-        term_idx, uniq_terms) numpy arrays — the same codec the
-        distributed decoder runs, minus the Arrow boundary."""
-        terms_b = blocks["term"].to_numpy(object)
-        uniq, tcodes = np.unique(terms_b, return_inverse=True)
-        docs_l, tfs_l, dls_l, tidx_l = [], [], [], []
-        for i in range(len(blocks)):
-            d = codec.delta_decode(blocks["docs_vb"].iat[i]).astype(np.int64)
-            docs_l.append(d)
-            tfs_l.append(codec.varbyte_decode(
-                blocks["tfs_vb"].iat[i]).astype(np.int64))
-            dls_l.append(codec.varbyte_decode(
-                blocks["dlens_vb"].iat[i]).astype(np.int64))
-            tidx_l.append(np.full(d.size, tcodes[i], dtype=np.int64))
-        if not docs_l:
-            z = np.empty(0, np.int64)
-            return z, z, z, z, uniq
-        return (np.concatenate(docs_l), np.concatenate(tfs_l),
-                np.concatenate(dls_l), np.concatenate(tidx_l), uniq)
-
     def _score_local(self, blocks: pd.DataFrame, term_df: dict,
                      required: "int | None", k: "int | None",
                      keep_classes: "list[int] | None",
@@ -537,11 +548,12 @@ class SegmentIndex:
         same HALF_UP rounding semantics (similarity._round_half_up — the
         pinned Spark Round parity), the same (score desc, doc_id asc)
         order and cursor/nterms filters. Returns [(doc_id, score)]."""
-        from .. import BM25_B, BM25_K1
-
-        doc_ids, tfs, dls, tidx, uniq = self._decode_local(blocks)
+        row, doc_ids, tfs, dls = _decode_rows(blocks)
         if doc_ids.size == 0:
             return []
+        uniq, tcodes = np.unique(blocks["term"].to_numpy(object),
+                                 return_inverse=True)
+        tidx = tcodes[row]
         if keep_classes is not None:
             cls = xxh64_long_np(doc_ids) % np.int64(self.nb_max)
             m = np.isin(cls, np.asarray(keep_classes, dtype=np.int64))
@@ -710,17 +722,24 @@ class SegmentIndex:
         return segs.join(F.broadcast(kdf), ["term", "gen", "salt"], "left_semi")
 
     def _decode(self, terms: list[str],
-                keys: set[tuple[str, int, int]] | None) -> DataFrame:
+                keys: set[tuple[str, int, int]] | None,
+                positions: bool = False) -> DataFrame:
+        """Live postings (or positions) of the query terms, optionally
+        cut to the (term, gen, salt) block keys — see _read."""
         segs = self._segments(terms)
         if keys is not None:
             segs = self._filter_keys(segs, keys)
-        # coalesce to core count: query-filtered segment sets are a few
-        # small files per bucket; without this every tiny file-partition
-        # spawns its own Python worker (decode-side worker storm)
+        return self._read(segs, positions)
+
+    def _read(self, segs: DataFrame, positions: bool = False) -> DataFrame:
+        """Every distributed query reads postings here: _read_live over
+        this index's tombstones, coalesced to core count — query-filtered
+        segment sets are a few small files per bucket, and without the
+        coalesce every tiny file-partition spawns its own Python worker
+        (decode-side worker storm)."""
         par = self.spark.sparkContext.defaultParallelism
-        return segs.select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb") \
-            .coalesce(max(1, par)) \
-            .mapInPandas(_decode_blocks, _DECODED_SCHEMA)
+        tomb = _tombstones(self.spark, self.path, self.generations)
+        return _read_live(segs, tomb, positions, max(1, par))
 
     # -- scoring ----------------------------------------------------------
     def _score(self, decoded: DataFrame, term_df: dict[str, int],
@@ -731,13 +750,6 @@ class SegmentIndex:
                min_terms: int | None = None,
                after: "tuple[float, int] | None" = None,
                filter_ids: DataFrame | None = None) -> DataFrame:
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         if filter_ids is not None:
             # ES filter context: restrict the candidate set WITHOUT touching
             # scores — a left-semi join on doc_id applied before aggregation
@@ -972,34 +984,24 @@ class SegmentIndex:
         blocks = self._blocks_local(
             uniq_terms, keys,
             cols=["term", "docs_vb", "tfs_vb", "pos_vb"])
-        per_term: dict[str, list] = {t: [] for t in uniq_terms}
-        total_pos = 0
-        for i in range(len(blocks)):
-            pvb = blocks["pos_vb"].iat[i]
-            if not pvb:
-                return None  # positions missing on disk: distributed path
-            docs = codec.delta_decode(
-                blocks["docs_vb"].iat[i]).astype(np.int64)
-            tfs = codec.varbyte_decode(blocks["tfs_vb"].iat[i])
-            total_pos += int(tfs.sum())
-            if total_pos > 4 * self.driver_max_postings:
-                return None  # tf-skewed volume: fall back
-            flat = codec.positions_decode(pvb, tfs).astype(np.int64)
-            drep = np.repeat(docs, tfs.astype(np.int64))
-            per_term[blocks["term"].iat[i]].append((drep, flat))
+        if not all(bool(v) for v in blocks["pos_vb"]):
+            return None  # positions missing on disk: distributed path
+        dec = _decode_rows(blocks, positions=True,
+                           max_positions=4 * self.driver_max_postings)
+        if dec is None:
+            return None  # tf-skewed volume: fall back
+        row, doc, pos = dec
+        if within_classes is not None:
+            cls = xxh64_long_np(doc) % np.int64(self.nb_max)
+            m = np.isin(cls, np.asarray(sorted(within_classes),
+                                        dtype=np.int64))
+            row, doc, pos = row[m], doc[m], pos[m]
+        term_of = blocks["term"].to_numpy(object)[row]
         arrs = {}
         max_pos, max_doc = 0, 0
         for t in uniq_terms:
-            if per_term[t]:
-                d = np.concatenate([x[0] for x in per_term[t]])
-                p = np.concatenate([x[1] for x in per_term[t]])
-            else:
-                d, p = np.empty(0, np.int64), np.empty(0, np.int64)
-            if within_classes is not None and d.size:
-                cls = xxh64_long_np(d) % np.int64(self.nb_max)
-                m = np.isin(cls, np.asarray(sorted(within_classes),
-                                            dtype=np.int64))
-                d, p = d[m], p[m]
+            m = term_of == t
+            d, p = doc[m], pos[m]
             if d.size == 0:
                 return []  # a phrase term has no surviving positions
             arrs[t] = (d, p)
@@ -1064,23 +1066,8 @@ class SegmentIndex:
         meta = self._meta(sorted(set(terms)))
         if meta.empty or set(meta["term"].unique()) != set(terms):
             return empty
-        # AND-feasible classes only
-        nb_all = self.nb_max
-        g = np.arange(nb_all)
-        present = np.ones(nb_all, dtype=bool)
-        for t, tgrp in meta.groupby("term"):
-            ct_full = np.zeros(nb_all)
-            for (gen, nb_t), grp in tgrp.groupby(["gen", "nb"]):
-                nb_t = int(nb_t)
-                ct = np.zeros(nb_t)
-                ct[grp["salt"].to_numpy()] = grp["count"].to_numpy()
-                ct_full += ct[g % nb_t]
-            present &= ct_full > 0
-        if within_classes is not None:
-            mask = np.zeros(nb_all, dtype=bool)
-            mask[[c for c in within_classes if 0 <= c < nb_all]] = True
-            present &= mask
-        classes = [int(x) for x in np.flatnonzero(present)]
+        slots = [[t] for t in terms]
+        classes = self._phrase_classes(meta, slots, within_classes)
         if not classes:
             return empty
         keys = self._keys_for_classes(meta, classes)
@@ -1101,28 +1088,58 @@ class SegmentIndex:
             rows = self._phrase_local(terms, keys, within_classes)
             if rows is not None:
                 return self._values_df(rows, "doc_id long, phrase_tf long")
-        segs = self._filter_keys(self._segments(sorted(set(terms))), keys)
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = segs.select("term", "gen", "docs_vb", "tfs_vb", "pos_vb") \
-            .coalesce(max(1, par)) \
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
+        decoded = self._decode(sorted(set(terms)), keys, positions=True)
         if within_classes is not None:
             # the block-level cut is a SUPERSET when a low-df term's
             # nb_t < nb_max (one block salt covers several global
             # classes); this columnar re-derivation makes the cut exact
             decoded = decoded.filter(
-                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(nb_all))
+                F.pmod(F.xxhash64(F.col("doc_id")), F.lit(self.nb_max))
                 .cast("int").isin([int(c) for c in within_classes]))
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
-        cur = decoded.filter(F.col("term") == terms[0]).select("doc_id", F.col("pos").alias("p0"))
-        for i, t in enumerate(terms[1:], start=1):
-            nxt = decoded.filter(F.col("term") == t).select(
+        return self._phrase_chain(decoded, slots, slop)
+
+    def _phrase_classes(self, meta: pd.DataFrame, slots: list[list[str]],
+                        within_classes: "list[int] | None" = None
+                        ) -> list[int]:
+        """AND-feasible salt classes of a phrase: those where EVERY slot
+        (a phrase position; a set of alternative terms) has postings of
+        at least one of its terms — the scorer's pruning lattice over
+        the aligned salting — optionally cut to ``within_classes``."""
+        nb_all = self.nb_max
+        g = np.arange(nb_all)
+        has: dict[str, np.ndarray] = {}
+        for t, tgrp in meta.groupby("term"):
+            ct_full = np.zeros(nb_all)
+            for (gen, nb_t), grp in tgrp.groupby(["gen", "nb"]):
+                nb_t = int(nb_t)
+                ct = np.zeros(nb_t)
+                ct[grp["salt"].to_numpy()] = grp["count"].to_numpy()
+                ct_full += ct[g % nb_t]
+            has[t] = ct_full > 0
+        none = np.zeros(nb_all, dtype=bool)
+        present = np.ones(nb_all, dtype=bool)
+        for slot in slots:
+            present &= np.logical_or.reduce(
+                [has.get(t, none) for t in slot])
+        if within_classes is not None:
+            mask = np.zeros(nb_all, dtype=bool)
+            mask[[c for c in within_classes if 0 <= c < nb_all]] = True
+            present &= mask
+        return [int(x) for x in np.flatnonzero(present)]
+
+    @staticmethod
+    def _phrase_chain(decoded: DataFrame, slots: list[list[str]],
+                      slop: int = 0) -> DataFrame:
+        """Phrase matching over decoded (term, doc_id, pos) rows: slot i
+        matches any of its terms at p0 + i (slop 0: adjacency equi-joins)
+        or, with slop > 0, at a position after slot i-1's and within
+        p0 + i + slop (see phrase_search) → (doc_id, phrase_tf)."""
+        def slot(i: int) -> DataFrame:
+            return decoded.filter(F.col("term").isin(slots[i]))
+
+        cur = slot(0).select("doc_id", F.col("pos").alias("p0"))
+        for i in range(1, len(slots)):
+            nxt = slot(i).select(
                 F.col("doc_id").alias(f"d{i}"), F.col("pos").alias(f"p{i}")
             )
             if slop <= 0:
@@ -1181,73 +1198,13 @@ class SegmentIndex:
         meta = self._meta(all_terms)
         if meta.empty or not set(exact) <= set(meta["term"].unique()):
             return empty
-        nb_all = self.nb_max
-        g = np.arange(nb_all)
-        present = np.ones(nb_all, dtype=bool)
-        exp_present = np.zeros(nb_all, dtype=bool)
-        exact_set = set(exact)
-        for t, tgrp in meta.groupby("term"):
-            ct_full = np.zeros(nb_all)
-            for (gen, nb_t), grp in tgrp.groupby(["gen", "nb"]):
-                nb_t = int(nb_t)
-                ct = np.zeros(nb_t)
-                ct[grp["salt"].to_numpy()] = grp["count"].to_numpy()
-                ct_full += ct[g % nb_t]
-            if t in exact_set:
-                present &= ct_full > 0
-            else:
-                exp_present |= ct_full > 0
-        present &= exp_present
-        classes = [int(x) for x in np.flatnonzero(present)]
+        slots = [[t] for t in exact] + [expansions]
+        classes = self._phrase_classes(meta, slots)
         if not classes:
             return empty
         keys = self._keys_for_classes(meta, classes)
-        segs = self._filter_keys(self._segments(all_terms), keys)
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = segs.select("term", "gen", "docs_vb", "tfs_vb",
-                              "pos_vb") \
-            .coalesce(max(1, par)) \
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull()
-                        | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
-        n = len(toks)
-        if n == 1:
-            # bare prefix phrase: every occurrence of any expansion counts
-            return (
-                decoded.filter(F.col("term").isin(expansions))
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("phrase_tf"))
-                .orderBy("doc_id")
-            )
-        cur = decoded.filter(F.col("term") == exact[0]).select(
-            "doc_id", F.col("pos").alias("p0"))
-        for i, t in enumerate(exact[1:], start=1):
-            nxt = decoded.filter(F.col("term") == t).select(
-                F.col("doc_id").alias(f"d{i}"), F.col("pos").alias(f"p{i}"))
-            cur = cur.join(
-                nxt,
-                (F.col("doc_id") == F.col(f"d{i}"))
-                & (F.col(f"p{i}") == F.col("p0") + i),
-            ).drop(f"d{i}")
-        i = n - 1
-        lastdf = decoded.filter(F.col("term").isin(expansions)).select(
-            F.col("doc_id").alias(f"d{i}"), F.col("pos").alias(f"p{i}"))
-        cur = cur.join(
-            lastdf,
-            (F.col("doc_id") == F.col(f"d{i}"))
-            & (F.col(f"p{i}") == F.col("p0") + i),
-        ).drop(f"d{i}")
-        return (
-            cur.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("phrase_tf"))
-            .orderBy("doc_id")
-        )
+        return self._phrase_chain(
+            self._decode(all_terms, keys, positions=True), slots)
 
     def highlight(self, query: str, docs: DataFrame,
                   text_col: str = "content", doc_col: str = "doc_id",
@@ -1282,8 +1239,7 @@ class SegmentIndex:
         # at k=10 / nb_max=256 the cut removes >= 96% of the volume).
         # Exactness: highlight_topk joins positions to the k hit ids, so
         # sibling docs sharing a kept block drop out there.
-        segs = self._segments(sorted(set(meta["term"].unique())))
-        hit_ids = None
+        keys = hit_ids = None
         if (k <= self.nb_max // 4
                 and self.n_docs >= self.pos_classes_min_docs):
             rows = topk.collect()
@@ -1298,22 +1254,9 @@ class SegmentIndex:
             from ..functions.hashing import xxh64_long
             classes = sorted(
                 {pmod(xxh64_long(d), self.nb_max) for d in hit_ids})
-            segs = self._filter_keys(segs,
-                                     self._keys_for_classes(meta, classes))
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = (
-            segs
-            .select("term", "gen", "docs_vb", "tfs_vb", "pos_vb")
-            .coalesce(max(1, par))
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
-        )
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
+            keys = self._keys_for_classes(meta, classes)
+        decoded = self._decode(sorted(set(meta["term"].unique())), keys,
+                               positions=True)
         from .highlight import highlight_topk
 
         return highlight_topk(
@@ -1376,7 +1319,7 @@ class SegmentIndex:
         """The FULL match set (doc_id only, no top-k cut) — what facet
         aggregation runs over. Exhaustive decode of the query terms'
         postings (block-max pruning is inapplicable: every match is
-        needed, not just the best k), tombstone-aware, with the same
+        needed, not just the best k), live postings only, with the same
         AND/OR/msm predicate as search()."""
         prefix, n_docs, _ = self._resolve_field(field)
         terms = sorted(
@@ -1396,13 +1339,6 @@ class SegmentIndex:
         if need > len(found):
             return empty
         decoded = self._decode(sorted(found), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         return (
             decoded.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("nterms"))
@@ -1522,17 +1458,11 @@ class SegmentIndex:
         # doc_len: decode ONE phrase term's postings (every phrase doc
         # contains every phrase term), restricted to the window's salt
         # classes at the block level when those are known,
-        # window-restricted, tombstone-aware
+        # window-restricted, live
         dl = self._decode(
             [pterms[0]],
             None if win_classes is None else self._keys_for_classes(
                 meta[meta["term"] == pterms[0]], win_classes))
-        tomb = self._tombstones()
-        if tomb is not None:
-            dl = (dl.join(F.broadcast(tomb), "doc_id", "left")
-                  .filter(F.col("tgen").isNull()
-                          | (F.col("tgen") <= F.col("gen")))
-                  .drop("tgen"))
         dl = (dl.join(win_ids, "doc_id", "left_semi")
               .groupBy("doc_id").agg(F.max("doc_len").alias("doc_len")))
         ptf = F.col("phrase_tf").cast("double")
@@ -1554,7 +1484,7 @@ class SegmentIndex:
         NO block-max pruning, because every consumer (function_score,
         boosting, dis_max) applies a per-document transform that voids
         the per-class score upper bounds. Exhaustive decode, same
-        tombstone/df semantics as search()."""
+        live-posting/df semantics as search()."""
         prefix, n_docs, avgdl = self._resolve_field(field)
         terms = sorted(
             {prefix + t for t in analyze_query_py(query, self.analyzer)}
@@ -1608,7 +1538,7 @@ class SegmentIndex:
         # replaced/deleted ids out); true deletions = tombstoned ids with
         # no live row — tombstones that merely superseded an upsert have
         # a live replacement
-        tomb = self._tombstones()
+        tomb = _tombstones(self.spark, self.path, self.generations)
         if tomb is None:
             del_stats = self.spark.range(1).select(
                 F.lit(0).cast("long").alias("docs_deleted"))
@@ -1994,14 +1924,6 @@ class SegmentIndex:
         if not mapping:
             return empty
         decoded = self._decode(sorted({t for t, _ in mapping}), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull()
-                        | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         mdf = self.spark.createDataFrame(mapping, "term string, gid int")
         gstats = self.spark.createDataFrame(
             [(g, d) for g, d in gid_df.items()], "gid int, df long")
@@ -2090,13 +2012,6 @@ class SegmentIndex:
             rows, "term string, base string, widf double, favgdl double"
         )
         decoded = self._decode(found, None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         cand = decoded.join(F.broadcast(params), "term")
         tf = F.col("tf").cast("double")
         dl = F.col("doc_len").cast("double")
@@ -2134,20 +2049,8 @@ class SegmentIndex:
         stripped of the field prefix, ordered for determinism."""
         fprefix, _, _ = self._resolve_field(field)
         full = fprefix + prefix
-        segs = self._all_segments().filter(F.col("term").startswith(full))
-        par = self.spark.sparkContext.defaultParallelism
-        decoded = (
-            segs.select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb")
-            .coalesce(max(1, par))
-            .mapInPandas(_decode_blocks, _DECODED_SCHEMA)
-        )
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
+        decoded = self._read(
+            self._all_segments().filter(F.col("term").startswith(full)))
         term_out = (
             F.expr(f"substring(term, {len(fprefix) + 1})") if fprefix
             else F.col("term")
@@ -2181,14 +2084,6 @@ class SegmentIndex:
         found = sorted(set(meta["term"].unique()))
         term_df = {t: int(g["count"].sum()) for t, g in meta.groupby("term")}
         decoded = self._decode(found, None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull()
-                        | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         stats = self.spark.createDataFrame(
             [(t, d) for t, d in term_df.items()], "term string, df long")
         return explain_score(
@@ -2294,13 +2189,6 @@ class SegmentIndex:
         if not exp:
             return self._empty_df("term string, doc_id long, tf long")
         decoded = self._decode(sorted(fprefix + t for t in exp), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         term_out = (
             F.expr(f"substring(term, {len(fprefix) + 1})") if fprefix
             else F.col("term")
@@ -2347,13 +2235,6 @@ class SegmentIndex:
         if not exp:
             return self._empty_df("term string, doc_id long, tf long")
         decoded = self._decode(sorted(fprefix + t for t in exp), None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-                .drop("tgen")
-            )
         term_out = (
             F.expr(f"substring(term, {len(fprefix) + 1})") if fprefix
             else F.col("term")
@@ -2405,12 +2286,6 @@ class SegmentIndex:
         ``field`` scopes the lookup on a fielded index."""
         prefix, _, _ = self._resolve_field(field)
         decoded = self._decode([prefix + term], None)
-        tomb = self._tombstones()
-        if tomb is not None:
-            decoded = (
-                decoded.join(F.broadcast(tomb), "doc_id", "left")
-                .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-            )
         return decoded.select("doc_id", "tf").orderBy("doc_id")
 
     @staticmethod
@@ -2445,7 +2320,7 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
         avgdl = Σ(n_docsᵢ·avgdlᵢ)/Σ n_docsᵢ (i.e. total tokens over total
         docs), per-term df = Σ shard metadata counts — so idf and length
         norms are identical to the union index's;
-      * each shard contributes its tombstone-filtered decoded postings;
+      * each shard contributes its live decoded postings;
         AND-mode shards missing a query term are skipped outright (a doc
         matching ALL terms must find every term in its OWN shard);
       * ONE global aggregation scores the union — doc_ids are required to
@@ -2460,7 +2335,6 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
     """
     if not indexes:
         raise ValueError("search_sharded needs at least one index")
-    spark = indexes[0].spark
     an = indexes[0].analyzer
     if any(ix.analyzer != an for ix in indexes):
         raise ValueError(
@@ -2507,40 +2381,11 @@ def search_sharded(indexes: "list[SegmentIndex]", query: str, k: int = 10,
         if msm is not None and len(shard_terms) < msm:
             continue  # a doc's terms live in ITS shard: < msm present
         d = ix._decode(shard_terms, None)
-        tomb = ix._tombstones()
-        if tomb is not None:
-            d = (d.join(F.broadcast(tomb), "doc_id", "left")
-                 .filter(F.col("tgen").isNull()
-                         | (F.col("tgen") <= F.col("gen")))
-                 .drop("tgen"))
         decoded = d if decoded is None else decoded.unionByName(d)
     if decoded is None:
         return empty
-    if filter_ids is not None:
-        # ES bool.filter across the alias: one semi-join on the UNIONED
-        # decode (same pre-aggregation placement as the single-index
-        # path; scores untouched)
-        decoded = decoded.join(filter_ids.select("doc_id"),
-                               "doc_id", "left_semi")
-    stats = spark.createDataFrame(
-        [(t, d) for t, d in term_df.items()], "term string, df long")
-    partial = bm25_partial_col(
-        F.col("tf").cast("double"), F.col("doc_len").cast("double"),
-        F.col("df").cast("double"), n_docs, avgdl)
-    scored = (
-        decoded.join(F.broadcast(stats), "term")
-        .select("doc_id", partial.alias("partial"))
-        .groupBy("doc_id")
-        .agg(F.sum("partial").alias("raw"),
-             F.count(F.lit(1)).alias("nterms"))
-    )
-    if is_and:
-        scored = scored.filter(F.col("nterms") == len(terms))
-    elif msm is not None:
-        scored = scored.filter(F.col("nterms") >= msm)
-    return (
-        scored.select("doc_id",
-                      F.round(F.col("raw"), ROUND_DECIMALS).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    # one global BM25 aggregation over the union (filter_ids semi-joins
+    # the UNIONED decode, the single-index placement)
+    return indexes[0]._score(
+        decoded, term_df, len(terms) if is_and else None, k,
+        n_docs=n_docs, avgdl=avgdl, min_terms=msm, filter_ids=filter_ids)

@@ -130,6 +130,9 @@ def apply_upserts(
             F.count(F.lit(1)).alias("n"),
             F.count_distinct("doc_id").alias("nd"),
             F.count(F.when(is_deleted, 1)).alias("ndel"),
+            # a NULL ``deleted`` is neither: the row is tombstoned but,
+            # like in ``live`` below, writes no new version
+            F.count(F.when(~is_deleted, 1)).alias("nup"),
         ).collect()[0]
         if int(r["n"]) == 0:
             return None
@@ -139,7 +142,7 @@ def apply_upserts(
                 "pass ts_col= to reduce to last-writer-wins or pre-dedupe"
             )
         n_deletes = int(r["ndel"])
-        n_upserts = int(r["n"]) - n_deletes
+        n_upserts = int(r["nup"])
     gen = max(_committed_gens(fs, index_dir) + [int(m.get("min_gen", 0))]) + 1
     t0 = time.time()
     delta_dir = pjoin(index_dir, "delta", f"gen={gen}")
@@ -291,37 +294,23 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     dirs are orphans rebuilt on retry); a crash after it leaves stale
     old dirs/manifests that readers ignore (min_gen) and the next fold's
     GC removes."""
-    from ..operators.wand import _DECODED_SCHEMA, SegmentIndex, _decode_blocks
+    from ..operators.wand import SegmentIndex, _read_live, _tombstones
 
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
     idx = SegmentIndex.load(spark, index_dir)
     with_pos = bool(m.get("positions", False))
     fielded = bool(m.get("field_stats"))
-    tomb = idx._tombstones()
-
-    def drop_superseded(df):
-        if tomb is None:
-            return df
-        return (
-            df.join(F.broadcast(tomb), "doc_id", "left")
-            .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-            .drop("tgen")
-        )
+    live = _read_live(idx._segments(None),
+                      _tombstones(spark, index_dir, idx.generations),
+                      positions=with_pos)
 
     if with_pos:
-        from ..operators.wand import _POS_SCHEMA, _decode_blocks_positions
-
-        pos_rows = drop_superseded(
-            idx._segments(None)
-            .select("term", "gen", "docs_vb", "tfs_vb", "pos_vb")
-            .mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
-        )
         # re-aggregate per-(term, doc) positions; exact doc_len from the
         # live docs table. A fielded docs table is keyed (doc, field) —
         # the composite term's prefix recovers the field for the join, so
         # each posting gets ITS field's doc_len, not a cross product.
-        regrouped = pos_rows.groupBy("term", "doc_id").agg(
+        regrouped = live.groupBy("term", "doc_id").agg(
             F.count(F.lit(1)).alias("tf"),
             F.sort_array(F.collect_list("pos")).alias("positions"),
         )
@@ -338,12 +327,7 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
                 .select("doc_id", "doc_len")
             post = regrouped.join(doc_lens, "doc_id")
     else:
-        decoded = drop_superseded(
-            idx._segments(None)
-            .select("term", "gen", "docs_vb", "tfs_vb", "dlens_vb")
-            .mapInPandas(_decode_blocks, _DECODED_SCHEMA)
-        )
-        post = decoded.select("term", "doc_id", "tf", "doc_len")
+        post = live.select("term", "doc_id", "tf", "doc_len")
     old_seg_dir = m.get("seg_dir", "segments")
     old_stats = m.get("stats_file", "stats.parquet")
     version = int(m.get("base_version", 0)) + 1
@@ -414,6 +398,9 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
 
     # best-effort GC — stale leftovers are ignored by readers (min_gen /
     # seg_dir pointers) and removed by the next fold if this crashes.
+    # Only generations <= the new min_gen are touched: the next
+    # apply_upserts writes gen=min_gen+1 under the same delta/ root, and
+    # may do so while the background removal below is still running.
     # The MANIFEST deletions stay synchronous: a follow-up load()'s
     # listdir-then-read would race a background delete into a
     # FileNotFoundError (they are tiny files — removing them is cheap).
@@ -421,14 +408,23 @@ def fold_deltas(spark: SparkSession, index_dir: str) -> dict:
     # driver-serial rmtree tail never sits on the fold's critical path
     # (same pattern as the spill-dir cleanup in build_segments); once
     # the manifests are gone no reader can reach those dirs.
+    min_gen = m["min_gen"]
     for name in fs.listdir(index_dir):
-        if name.startswith("delta_manifest_") and name.endswith(".json"):
+        if (name.startswith("delta_manifest_") and name.endswith(".json")
+                and int(name[len("delta_manifest_"):-5]) <= min_gen):
             fs.rmtree(pjoin(index_dir, name))
+    delta_root = pjoin(index_dir, "delta")
+    folded_dirs = [
+        pjoin(delta_root, name)
+        for name in (fs.listdir(delta_root) if fs.isdir(delta_root) else [])
+        if name.startswith("gen=") and int(name[4:]) <= min_gen
+    ]
 
     def _gc():
         fs.rmtree(pjoin(index_dir, old_seg_dir))
         fs.rmtree(pjoin(index_dir, old_stats))
-        fs.rmtree(pjoin(index_dir, "delta"))
+        for d in folded_dirs:
+            fs.rmtree(d)
 
     import threading
 
@@ -472,12 +468,7 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     the pointer without re-merging). Time travel into the merged range
     raises on load, exactly like pre-fold generations."""
     from ..operators.segments import SEGMENT_READ_SCHEMA
-    from ..operators.wand import (
-        _DECODED_SCHEMA,
-        _POS_SCHEMA,
-        _decode_blocks,
-        _decode_blocks_positions,
-    )
+    from ..operators.wand import _read_live, _segment_scan, _tombstones
 
     fs = storage.fs_for(index_dir, spark)
     m = storage.read_json(fs, pjoin(index_dir, "index.json"))
@@ -513,40 +504,13 @@ def merge_delta_tier(spark: SparkSession, index_dir: str) -> dict | None:
     t0 = time.time()
     with_pos = bool(m.get("positions", False))
 
-    seg_parts, tomb_parts = [], []
-    for g in gens:
-        seg_parts.append(
-            spark.read.schema(SEGMENT_READ_SCHEMA)
-            .parquet(pjoin(index_dir, "delta", f"gen={g}", "segments"))
-            .withColumn("gen", F.lit(g))
-        )
-        tomb_parts.append(
-            spark.read.parquet(pjoin(index_dir, "delta", f"gen={g}",
-                                     "tombstones"))
-            .select("doc_id", F.lit(g).alias("tgen"))
-        )
-    segs = seg_parts[0]
-    for p in seg_parts[1:]:
-        segs = segs.unionByName(p)
-    tomb_all = tomb_parts[0]
-    for p in tomb_parts[1:]:
-        tomb_all = tomb_all.unionByName(p)
-    tomb = tomb_all.groupBy("doc_id").agg(F.max("tgen").alias("tgen"))
-
-    decoded = segs.select(
-        "term", "gen", "docs_vb", "tfs_vb", "dlens_vb"
-    ).mapInPandas(_decode_blocks, _DECODED_SCHEMA)
-    live = (
-        decoded.join(F.broadcast(tomb), "doc_id", "left")
-        .filter(F.col("tgen").isNull() | (F.col("tgen") <= F.col("gen")))
-        .drop("tgen")
-    )
+    segs = _segment_scan(spark, index_dir, gens)
+    tomb = _tombstones(spark, index_dir, gens)
+    live = _read_live(segs, tomb)
     if with_pos:
         # positions rejoin their (term, gen, doc): after the in-set
         # supersede each (term, doc) survives in exactly one generation
-        pos = segs.select(
-            "term", "gen", "docs_vb", "tfs_vb", "pos_vb"
-        ).mapInPandas(_decode_blocks_positions, _POS_SCHEMA)
+        pos = _read_live(segs, None, positions=True)
         pos_grp = pos.groupBy("term", "gen", "doc_id").agg(
             F.sort_array(F.collect_list("pos")).alias("positions")
         )

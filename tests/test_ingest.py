@@ -274,3 +274,68 @@ def test_time_travel_load_as_of_generation(spark):
     with pytest.raises(ValueError, match="folded"):
         SegmentIndex.load(spark, path, as_of_gen=1)
     shutil.rmtree(path)
+
+
+def _batch(spark, rows):
+    return spark.createDataFrame(
+        rows, "doc_id long, content string, deleted boolean")
+
+
+def test_fold_gc_spares_next_generation(spark, monkeypatch):
+    """fold_deltas' background GC removes only the folded generations:
+    a generation that apply_upserts commits while that GC is still
+    running keeps its segments. The GC thread is held at its first
+    delta removal until the next batch has committed."""
+    import threading
+
+    from content_rw_elasticsearch_spark import storage
+
+    path = BASE + "_gc"
+    _mk_index(spark, path)
+    ingest.apply_upserts(spark, path, _batch(spark, [
+        (9_999_999_101, "zzzfirstgen body", False)]),
+        "content", "doc_id", "deleted")
+    gate = threading.Event()
+    fs_cls = type(storage.fs_for(path, spark))
+    real_rmtree = fs_cls.rmtree
+
+    def gated_rmtree(self, p):
+        if (threading.current_thread() is not threading.main_thread()
+                and "/delta" in p):
+            gate.wait(120)
+        return real_rmtree(self, p)
+
+    monkeypatch.setattr(fs_cls, "rmtree", gated_rmtree)
+    before = set(threading.enumerate())
+    try:
+        ingest.fold_deltas(spark, path)
+        gc_threads = [t for t in threading.enumerate() if t not in before]
+        man = ingest.apply_upserts(spark, path, _batch(spark, [
+            (9_999_999_102, "zzzsecondgen body", False)]),
+            "content", "doc_id", "deleted")
+    finally:
+        gate.set()
+    for t in gc_threads:
+        t.join(120)
+        assert not t.is_alive()
+    idx = SegmentIndex.load(spark, path)
+    assert idx.generations == [man["gen"]]
+    assert set(_ids(idx.search("zzzsecondgen", k=10))) == {9_999_999_102}
+    assert set(_ids(idx.search("zzzfirstgen", k=10))) == {9_999_999_101}
+    shutil.rmtree(path)
+
+
+def test_null_deleted_is_not_counted_as_upsert(spark):
+    """A NULL ``deleted`` row writes no new version (``live`` keeps only
+    deleted == false), so it must not count toward n_upserts."""
+    path = BASE + "_nulldel"
+    _mk_index(spark, path)
+    man = ingest.apply_upserts(spark, path, _batch(spark, [
+        (9_999_999_201, "zzznulldeleted body", None),
+        (9_999_999_202, "zzzliveupsert body", False),
+        (9_999_999_203, "", True),
+    ]), "content", "doc_id", "deleted")
+    assert (man["n_upserts"], man["n_deletes"]) == (1, 1)
+    idx = SegmentIndex.load(spark, path)
+    assert _ids(idx.search("zzznulldeleted", k=10)) == []
+    shutil.rmtree(path)

@@ -267,21 +267,122 @@ def test_fuzzy_fielded_scoped(seg_idx, mem_idx):
     assert got == want and got
 
 
-def test_prefix_respects_tombstones(spark, tmp_path):
-    """Deleted docs disappear from prefix expansions (live postings)."""
+# --- last-writer-wins over every live-postings reader -----------------------
+#
+# One delta generation over a six-doc corpus: doc 1 is deleted and doc 2
+# is upserted from "alpha beta delta" to "omega alpha zeta". Every reader
+# below must serve the live state only — no posting of doc 1, and no
+# posting of doc 2's superseded version (the only one with beta/delta).
+
+_TOMB_DOCS = [
+    (1, "alpha beta gamma"),
+    (2, "alpha beta delta"),
+    (3, "alpha beta epsilon"),
+    (4, "beta alpha theta"),
+    (5, "alpha kappa beta"),
+    (6, "lambda mu nu"),
+]
+_TOMB_BATCH = [(1, "", True), (2, "omega alpha zeta", False)]
+
+
+@pytest.fixture(scope="module")
+def tomb_idx(spark, tmp_path_factory):
+    """(positional index, fielded index, live docs), each index holding
+    the one delta generation described above."""
     from content_rw_elasticsearch_spark.streaming.ingest import apply_upserts
-    docs = spark.read.parquet(f"{SF}/documents.parquet").limit(60)
-    out = str(tmp_path / "pfx_del")
-    build_segments(docs, out, text_col="text", doc_col="doc_id",
-                   n_buckets=2, target_block=64, nb_max=4)
-    idx = SegmentIndex.load(spark, out)
-    before = {r["doc_id"] for r in idx.prefix_postings("s").collect()}
-    assert before
-    victim = sorted(before)[0]
+
+    root = tmp_path_factory.mktemp("tomb")
+    docs = spark.createDataFrame(_TOMB_DOCS, "doc_id long, text string")
     batch = spark.createDataFrame(
-        [(int(victim), "", True)], "doc_id long, content string, deleted boolean"
+        _TOMB_BATCH, "doc_id long, text string, deleted boolean")
+    pos_dir, fld_dir = str(root / "pos"), str(root / "fld")
+    build_segments(docs, pos_dir, text_col="text", doc_col="doc_id",
+                   n_buckets=2, target_block=64, nb_max=4,
+                   with_positions=True)
+    apply_upserts(spark, pos_dir, batch, "text", "doc_id", "deleted")
+    fields = {"title": F.col("text"), "body": F.col("text")}
+    build_segments(docs, fld_dir, doc_col="doc_id", n_buckets=2,
+                   target_block=64, nb_max=4, fields=fields)
+    apply_upserts(spark, fld_dir, batch, doc_col="doc_id",
+                  deleted_col="deleted", fields=fields)
+    live = spark.createDataFrame(
+        [(3, "alpha beta epsilon"), (4, "beta alpha theta"),
+         (5, "alpha kappa beta"), (6, "lambda mu nu"),
+         (2, "omega alpha zeta")], "doc_id long, text string")
+    pos, fld = SegmentIndex.load(spark, pos_dir), SegmentIndex.load(spark, fld_dir)
+    assert pos.generations and fld.generations
+    return pos, fld, live
+
+
+def _doc_ids(df):
+    return {r["doc_id"] for r in df.collect()}
+
+
+def _rescored_docs(idx):
+    """Docs whose score the phrase rescore changed (phrase matches)."""
+    base = {r["doc_id"]: r["score"] for r in
+            idx.search("alpha", k=10).collect()}
+    return {r["doc_id"] for r in
+            idx.rescore("alpha", "alpha beta", k=10).collect()
+            if r["score"] != base[r["doc_id"]]}
+
+
+def _bool(idx):
+    from content_rw_elasticsearch_spark.operators.boolquery import (
+        segment_bool_topk,
     )
-    apply_upserts(spark, out, batch, "content", "doc_id", "deleted")
-    idx2 = SegmentIndex.load(spark, out)
-    after = {r["doc_id"] for r in idx2.prefix_postings("s").collect()}
-    assert victim not in after and after == before - {victim}
+    return _doc_ids(segment_bool_topk(idx, must="beta",
+                                      should="gamma delta",
+                                      min_should_match=0))
+
+
+def _sharded(idx):
+    from content_rw_elasticsearch_spark.operators.wand import search_sharded
+    return _doc_ids(search_sharded([idx], "alpha beta", k=10))
+
+
+_LIVE_BETA = {3, 4, 5}  # live docs containing beta
+_READERS = {
+    "term_lookup": lambda ix, live: _doc_ids(ix.term_lookup("beta")),
+    "prefix_postings": lambda ix, live: _doc_ids(ix.prefix_postings("bet")),
+    "fuzzy_postings": lambda ix, live: _doc_ids(ix.fuzzy_postings("betta")),
+    "regexp_postings": lambda ix, live: _doc_ids(ix.regexp_postings("bet.")),
+    "explain": lambda ix, live: {
+        d for d in (1, 2, 3) if ix.explain("beta", d).count()},
+    "count": lambda ix, live: ix.count("alpha beta").collect()[0][0],
+    "search": lambda ix, live: _doc_ids(ix.search("alpha beta", k=10)),
+    "search_synonyms": lambda ix, live: _doc_ids(
+        ix.search_synonyms("beta", {"beta": ["delta"]}, k=10)),
+    "search_sharded": lambda ix, live: _sharded(ix),
+    "bool_query": lambda ix, live: _bool(ix),
+    "phrase_slop0": lambda ix, live: _doc_ids(ix.phrase_search("alpha beta")),
+    "phrase_slop1": lambda ix, live: _doc_ids(
+        ix.phrase_search("alpha beta", slop=1)),
+    "phrase_prefix_search": lambda ix, live: _doc_ids(
+        ix.phrase_prefix_search("alpha bet")),
+    "highlight": lambda ix, live: {
+        (r["doc_id"], r["n_window_terms"]) for r in ix.highlight(
+            "alpha beta", live, text_col="text", k=10, mode="OR").collect()},
+    "rescore": lambda ix, live: _rescored_docs(ix),
+    "search_multi": lambda ix, live: _doc_ids(ix.search_multi(
+        "alpha beta", {"title": 1.0, "body": 1.0}, k=10)),
+}
+_EXPECTED = {
+    "explain": {3},
+    "count": 3,
+    "phrase_slop0": {3},
+    "phrase_slop1": {3, 5},
+    "phrase_prefix_search": {3},
+    # doc 2's live version holds alpha alone: one window term, not two
+    "highlight": {(2, 1), (3, 2), (4, 2), (5, 2)},
+    "rescore": {3},
+}
+
+
+@pytest.mark.parametrize("reader", list(_READERS))
+def test_prefix_respects_tombstones(tomb_idx, reader):
+    """Deleted docs and superseded versions are gone from every reader
+    of the segment store (live postings only)."""
+    pos, fld, live = tomb_idx
+    got = _READERS[reader](fld if reader == "search_multi" else pos, live)
+    assert got == _EXPECTED.get(reader, _LIVE_BETA)

@@ -220,3 +220,31 @@ def test_highlight_hit_ids_push_to_docs_scan(spark, seg):
     pushed = [ln for ln in plan.splitlines()
               if "PushedFilters" in ln and "doc_id" in ln]
     assert any("In(doc_id" in ln for ln in pushed), plan
+
+
+def test_delta_search_decodes_and_filters_once(spark, tmp_path):
+    """With a live delta generation and the driver fast path off, search
+    runs ONE decode (MapInPandas) and ONE last-writer-wins filter (the
+    tombstone join — the plan's only LeftOuter join): the filter is
+    neither dropped nor applied twice."""
+    from content_rw_elasticsearch_spark.streaming.ingest import apply_upserts
+
+    out = str(tmp_path / "idx")
+    docs = spark.read.parquet(f"{SF}/documents.parquet") \
+        .orderBy("doc_id").limit(200)
+    build_segments(docs, out, text_col="text", doc_col="doc_id",
+                   n_buckets=4, target_block=64, nb_max=8)
+    first = docs.select("doc_id").first()["doc_id"]
+    apply_upserts(spark, out, spark.createDataFrame(
+        [(first, "hash join again", False)],
+        "doc_id long, content string, deleted boolean"),
+        "content", "doc_id", "deleted")
+    idx = SegmentIndex.load(spark, out)
+    assert len(idx.generations) == 1
+    idx.driver_max_postings = 0
+    df = idx.search("hash join", k=10)
+    assert df.collect()
+    final = _executed(df).split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final
+    assert final.count("LeftOuter") == 1, final
+    assert final.count("isnull(tgen") == 1, final

@@ -55,6 +55,49 @@ def test_codec_roundtrip_property():
         assert np.array_equal(codec.delta_decode(codec.delta_encode(s)), s)
 
 
+def test_block_decoder_matches_per_block_codec():
+    """wand._decode_rows decodes a whole frame of blocks in one pass
+    (concatenated streams, per-block doc-id re-basing); the reference is
+    the per-block codec loop, over blocks of every size including empty
+    ones and with doc ids up to 2^62."""
+    import pandas as pd
+
+    from content_rw_elasticsearch_spark.operators.wand import _decode_rows
+
+    rng = np.random.RandomState(7)
+    rows, ref, ref_pos = [], [], []
+    for i in range(60):
+        n = rng.randint(0, 40)
+        ids = np.unique(rng.randint(0, 2**62, size=n).astype(np.uint64))
+        tfs = rng.randint(1, 6, size=ids.size).astype(np.uint64)
+        dls = rng.randint(1, 10_000, size=ids.size).astype(np.uint64)
+        pos = np.concatenate(
+            [np.sort(rng.choice(500, int(t), replace=False)) for t in tfs]
+            + [np.empty(0, np.int64)]).astype(np.uint64)
+        rows.append({"docs_vb": codec.delta_encode(ids),
+                     "tfs_vb": codec.varbyte_encode(tfs),
+                     "dlens_vb": codec.varbyte_encode(dls),
+                     "pos_vb": codec.positions_encode(pos, tfs)})
+        r = rows[-1]
+        d = codec.delta_decode(r["docs_vb"]).astype(np.int64)
+        t = codec.varbyte_decode(r["tfs_vb"])
+        ref.append((np.full(d.size, i), d, t.astype(np.int64),
+                    codec.varbyte_decode(r["dlens_vb"]).astype(np.int64)))
+        ref_pos.append((np.repeat(np.full(d.size, i), t.astype(np.int64)),
+                        np.repeat(d, t.astype(np.int64)),
+                        codec.positions_decode(r["pos_vb"], t)
+                        .astype(np.int64)))
+    blocks = pd.DataFrame(rows)
+    for got, want in [(_decode_rows(blocks), ref),
+                      (_decode_rows(blocks, positions=True), ref_pos)]:
+        for g, w in zip(got, zip(*want)):
+            assert np.array_equal(g, np.concatenate(w))
+    total_tf = sum(int(codec.varbyte_decode(r["tfs_vb"]).sum()) for r in rows)
+    assert _decode_rows(blocks, True, max_positions=total_tf) is not None
+    assert _decode_rows(blocks, True, max_positions=total_tf - 1) is None
+    assert all(a.size == 0 for a in _decode_rows(blocks.iloc[:0]))
+
+
 QUERIES = [
     ("return import", "AND", 10),
     ("return", "AND", 10),           # hottest term, max salting
